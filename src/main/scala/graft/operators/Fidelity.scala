@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Fns.javaRound
@@ -28,8 +28,25 @@ import graft.sources.CaaCsv
   * mapper combining with flush-when-full (`Delay.java:22-28`) — needs
   * no equivalent here: Spark always plans partial aggregation before
   * the exchange and spills under pressure.
+  *
+  * Job shape (shared with the three text jobs of [[graft.jobs.JobsMain]]):
+  * scan → partial aggregate → one hash shuffle → final aggregate and
+  * sort in one task ([[keySorted]]) → collect, i.e. two Spark jobs.
   */
 object Fidelity {
+
+  /** Key-sorts a job's final aggregate inside a single partition, like
+    * the reference's single reducer, which receives its keys already
+    * sorted by the shuffle. A global `orderBy` would instead add a
+    * range-partition sampling job (which recomputes the aggregate), a
+    * second shuffle and a sort stage.
+    *
+    * The one limit: the final aggregate and the sort run in one task.
+    * That suits outputs bounded by the number of keys (airports,
+    * airline-years, words, user–url pairs); a WordCount over a very
+    * large vocabulary would need a range sort again. */
+  def keySorted(df: DataFrame, keys: Column*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(keys: _*)
 
   /** Parse raw lines → (typed columns used by both jobs). Malformed
     * numerics crash the job, exactly like the reference's bare
@@ -65,7 +82,7 @@ object Fidelity {
       .select(col("airport"),
         nanRatio(col("arr_sum"), col("arr_n")).as("avg_arr"),
         nanRatio(col("dep_sum"), col("dep_n")).as("avg_dep"))
-      .orderBy("airport")
+      .transform(keySorted(_, col("airport")))
 
   /** Java double-division semantics: 0/0 = NaN (reference
     * `Delay.java:190` divides unguarded; Spark 4's ANSI mode would
@@ -100,5 +117,5 @@ object Fidelity {
       // MapReduce sorted the composite Text key "airline,year" by bytes;
       // sorting by (airline, year) columns diverges when one airline is a
       // proper prefix of another followed by a char < ',' (e.g. space).
-      .orderBy(concat(col("airline"), lit(","), col("year")))
+      .transform(keySorted(_, concat(col("airline"), lit(","), col("year"))))
 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Bit-exact port of the reference's hand-rolled CSV dialect
   * (`splitbycomma`, reference `Program/Delay.java:144-162`, duplicated
   * at `Program/Late.java:131-149`) — used only on the fidelity path;
@@ -26,11 +24,15 @@ import scala.collection.mutable.ArrayBuffer
   * Quirks 5 and 6 fall straight out of keeping the reference's exact
   * index arithmetic (`indexOf`-based `end`, `i = end + 2`) rather than
   * a cleaned-up scanner.
+  *
+  * The tokens collect in a `java.util.ArrayList` and leave as a
+  * `String[]`: a Scala buffer's `toArray` looks up a `ClassTag` on every
+  * line, about a tenth of the Delay parse loop's CPU samples.
   */
 object CaaCsv {
 
   def splitByComma(line: String): Array[String] = {
-    val out = new ArrayBuffer[String]()
+    val out = new java.util.ArrayList[String]()
     var i = 0
     val n = line.length
     while (i < n) {
@@ -41,9 +43,9 @@ object CaaCsv {
           val e = line.indexOf(',', i) - 1
           if (e < 0) n - 1 else e // -1 at i==0 only: leading comma (quirk 5)
         }
-      out += line.substring(start, end + 1) // throws on quirk 6 when start > 0
+      out.add(line.substring(start, end + 1)) // throws on quirk 6 when start > 0
       i = end + 2
     }
-    out.toArray
+    out.toArray(new Array[String](out.size))
   }
 }
